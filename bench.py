@@ -13,8 +13,9 @@ session view no longer moves it off the scored ledger. Both components are
 still printed separately (``total_sec`` is the old-basis number, directly
 comparable to r14/r15 artifacts; ``prepare_sec`` + the per-item ``prepare``
 map break down the warm-up). ``artifacts`` reports the cold/warm status of
-every across-run ``.weights_cache`` artifact touched during prepare, so a
-reader can tell a cold-store run from a warm one (r15 verdict demand #2).
+every across-run ``.weights_cache`` artifact touched anywhere in the process
+(prepare and the queries alike; it is snapshotted after the last query), so
+a reader can tell a cold-store run from a warm one (r15 verdict demand #2).
 """
 
 from __future__ import annotations

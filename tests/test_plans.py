@@ -950,6 +950,51 @@ def test_stream_upsert_state_table_is_bucket_partitioned(spark, sf_dir, tmp_path
     assert "CartesianProduct" not in plan
 
 
+def test_stream_upsert_restores_confs_on_failure(spark, sf_dir, monkeypatch):
+    """A failure anywhere after the upsert sink overrides its two session
+    confs (here: the source read) must still restore both."""
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.sources import (
+        readers,
+    )
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.streaming.score_stream import (
+        stream_upsert_sink,
+    )
+
+    def boom(*a, **k):
+        raise RuntimeError("load_table failed")
+
+    keys = ("spark.sql.sources.partitionOverwriteMode", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(k) for k in keys]
+    monkeypatch.setattr(readers, "load_table", boom)
+    with pytest.raises(RuntimeError, match="load_table failed"):
+        stream_upsert_sink(spark, sf_dir)
+    assert [spark.conf.get(k) for k in keys] == before
+
+
+def test_view_persist_validates_storage_level(monkeypatch):
+    """SPARK_GRAFT_VIEW_STORAGE must name a StorageLevel member; a typo
+    fails with the variable and the allowed names, before any persist."""
+    from pyspark import StorageLevel
+
+    from unsupervised_anomaly_detection_on_noisy_time_series_data_for_accurate_load_forecasting_spark.plans.shared import (
+        view_persist,
+    )
+
+    class Frame:
+        level = None
+
+        def persist(self, level):
+            self.level = level
+
+    monkeypatch.setenv("SPARK_GRAFT_VIEW_STORAGE", "DISK_ONLY")
+    assert view_persist(Frame()).level == StorageLevel.DISK_ONLY
+    monkeypatch.setenv("SPARK_GRAFT_VIEW_STORAGE", "DISK_ONLYY")
+    frame = Frame()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_VIEW_STORAGE.*DISK_ONLY, DISK_ONLY_2"):
+        view_persist(frame)
+    assert frame.level is None
+
+
 def test_stream_ewma_control_state_is_scalar(spark):
     """The EWMA control chart's state schema must stay five scalars — a
     list/map column here would mean per-user state growing with the

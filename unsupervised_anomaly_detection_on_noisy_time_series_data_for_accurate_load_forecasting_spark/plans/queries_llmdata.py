@@ -1030,7 +1030,9 @@ def pipeline_span_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for in write+read form); what disappears is re-running the gate
     # expression over every doc's token array 3 extra times. Survivor set
     # identical by determinism of the gate, so the join-gated q equals the
-    # filter-gated q row-for-row.
+    # filter-gated q row-for-row — PROVIDED doc_id is unique in documents
+    # (it is at sf0.001-sf0.1): with a duplicated id, the semi-join
+    # would keep a copy that fails the gate whenever its twin passes.
     gate_ids = ckpt_coalesced(
         d.filter(TX.quality_score() >= F.lit(_PREP_CUT)).select("doc_id")
     )

@@ -52,6 +52,12 @@ def view_persist(df: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
 
     name = os.environ.get("SPARK_GRAFT_VIEW_STORAGE", "MEMORY_AND_DISK_DESER")
+    levels = sorted(k for k, v in vars(StorageLevel).items() if isinstance(v, StorageLevel))
+    if name not in levels:
+        raise ValueError(
+            f"SPARK_GRAFT_VIEW_STORAGE={name!r} is not a StorageLevel; "
+            f"allowed: {', '.join(levels)}"
+        )
     df.persist(getattr(StorageLevel, name))
     return df
 

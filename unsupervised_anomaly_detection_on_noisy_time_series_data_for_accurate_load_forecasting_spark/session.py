@@ -81,6 +81,12 @@ def get_spark(
         # drained worker pool otherwise makes the next Arrow-island stage
         # pay ~2-4 s of imports in every concurrent fresh worker (measured:
         # codec islands 1.4 s isolated vs 5-15 s in-bench on a cold pool).
+        # The daemon also strips ~0.28 s of CPU from every task of a reused
+        # worker (Python 3.11): ~0.2 s re-parsing pyspark.zip's directory
+        # on each per-task importlib.invalidate_caches(), which it makes
+        # lazy (keyed on the archive's mtime and size), and ~0.06 s of the
+        # per-task gc.collect() walking the preloaded heap, which
+        # gc.freeze() takes out of collection.
         # See worker_daemon.py.
         .config(
             "spark.python.daemon.module",

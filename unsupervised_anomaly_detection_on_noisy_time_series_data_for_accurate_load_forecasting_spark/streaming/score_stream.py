@@ -411,21 +411,6 @@ def stream_upsert_sink(
 
     from ..sources.readers import load_table
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # r16 (r15 verdict §3): the per-batch merge jobs used the SESSION's
-    # shuffle partitioning (= core count), so every micro-batch paid
-    # per-partition constants that GREW with parallelism — measured
-    # 13.5 s at 32 cores vs 7.9 s at 8 (the suite's only anti-scaler) —
-    # and each rewrite scattered every touched bucket across
-    # shuffle-partition-many files, inflating the next batch's read-back.
-    # State volume, not core count, should size these jobs: the same
-    # byte-derived count every sibling stream uses (ceil(bytes/32 MB) —
-    # thousands at 100 TB, 1 at sf0.1).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stream_state_partitions(sf_dir))
-    )
     # r15: scratch (source split, state table, checkpoint) on the tmpfs
     # scratch root — this path rewrites the state table once per
     # micro-batch, pure scratch I/O for the replay harness. The dir name
@@ -438,15 +423,6 @@ def stream_upsert_sink(
         f"{root}/src",
         f"{root}/state",
         f"{root}/ckpt",
-    )
-    events = load_table(spark, sf_dir, "events")
-    # deterministic n-file split -> n micro-batches under maxFilesPerTrigger=1
-    events.repartition(n_files, "user_id").write.mode("overwrite").parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
     )
 
     def merge(batch: DataFrame, batch_id: int) -> None:
@@ -494,7 +470,32 @@ def stream_upsert_sink(
             "bucket"
         ).parquet(state_dir)
 
+    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # r16 (r15 verdict §3): the per-batch merge jobs used the SESSION's
+        # shuffle partitioning (= core count), so every micro-batch paid
+        # per-partition constants that GREW with parallelism — measured
+        # 13.5 s at 32 cores vs 7.9 s at 8 (the suite's only anti-scaler) —
+        # and each rewrite scattered every touched bucket across
+        # shuffle-partition-many files, inflating the next batch's read-back.
+        # State volume, not core count, should size these jobs: the same
+        # byte-derived count every sibling stream uses (ceil(bytes/32 MB) —
+        # thousands at 100 TB, 1 at sf0.1).
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(stream_state_partitions(sf_dir))
+        )
+        events = load_table(spark, sf_dir, "events")
+        # deterministic n-file split -> n micro-batches under maxFilesPerTrigger=1
+        events.repartition(n_files, "user_id").write.mode("overwrite").parquet(src_dir)
+
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src_dir)
+        )
+
         q = (
             stream.writeStream.foreachBatch(merge)
             .option("checkpointLocation", ckpt)
